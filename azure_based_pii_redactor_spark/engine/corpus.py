@@ -17,16 +17,71 @@ callers can reproduce any subset:
 
 Returns ``(corpus, report)``: the final DataFrame (url, warc_ts, lang,
 lang_pred, text) and a small driver-side dict of per-stage row counts --
-the funnel numbers every pipeline run must log.  The counts cost one
-``count()`` per enabled stage; pass ``report_counts=False`` to build the
-plan lazily with zero extra jobs.
+the funnel numbers every pipeline run must log.
+
+Report mode (the default) takes those counts from the jobs the build
+runs anyway.  Every stage carries an unnamed ``Observation`` (a count
+computed in the stage's own pass), and the stages that several
+consumers read end in an eager ``localCheckpoint`` barrier: after the
+scrub kernel, after line and passage removal, and once after the
+decontamination/sampling tail.  Each barrier's job fills the
+observations of every stage since the previous barrier, so each stage
+runs once and no ``count()`` job runs; the returned frame reads the
+last barrier.  Barrier jobs carry the description ``corpus:<stage>``.
+Pass ``report_counts=False`` to build the plan lazily: no observation,
+no barrier, ``{}`` as the report.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from .pipeline import run_scrub_pipeline
+from .session import job_description
+
+
+class _Funnel:
+    """Report-mode bookkeeping of ``build_training_corpus``: ``stage``
+    attaches an Observation to a stage frame, ``barrier`` materializes
+    the frame and reads every observation pending since the last one.
+    With ``report_counts=False`` both are identity functions."""
+
+    def __init__(self, report_counts: bool) -> None:
+        self.on = report_counts
+        self.report: dict = {}
+        self._pending: list[tuple[str, DataFrame, Observation, list]] = []
+
+    def stage(self, name: str, df: DataFrame, **extra: Column) -> DataFrame:
+        """Report ``name`` = the row count of ``df``, plus one key per
+        ``extra`` aggregate over it (side-channel keys, not stages)."""
+        if not self.on:
+            return df
+        aggs = {name: F.count(F.lit(1)), **extra}
+        self.report.update(dict.fromkeys(aggs))  # keep stage order
+        cols = [a.alias(k) for k, a in aggs.items()]
+        obs = Observation()
+        self._pending.append((name, df, obs, cols))
+        return df.observe(obs, *cols)
+
+    def barrier(self, df: DataFrame) -> DataFrame:
+        """Materialize ``df`` once (it feeds several consumers) and fill
+        the report from the observations that job carried."""
+        if not self._pending:
+            return df
+        label = self._pending[-1][0].removeprefix("after_")
+        with job_description(df.sparkSession, f"corpus:{label}"):
+            df = df.localCheckpoint()
+        for name, raw, obs, cols in self._pending:
+            if obs._jo.getRow().length():
+                self.report.update(obs.get)
+                continue
+            # AQE drops a metrics node whose subtree it proves empty at
+            # run time (an inner join with an empty side, say); the
+            # observation then completes without a row
+            with job_description(df.sparkSession, f"corpus:{name}:count"):
+                self.report.update(raw.agg(*cols).first().asDict())
+        self._pending.clear()
+        return df
 
 
 def build_training_corpus(
@@ -83,45 +138,41 @@ def build_training_corpus(
     ``kept_tokens`` (a side-channel report key like
     ``scrub_changed_docs``, not a stage).  Note: the budget's bucket-sum
     pass is one eager job even with ``report_counts=False`` -- picking
-    the cutoff bucket requires it; the zero-extra-jobs guarantee of lazy
-    mode holds for every other stage.
+    the cutoff bucket requires it (the same pass yields the stage's row
+    count); the zero-extra-jobs guarantee of lazy mode holds for every
+    other stage.
     """
     from .operators.textstats import WINDOW_N
 
     if passage_n is None:
         passage_n = WINDOW_N
-    report: dict = {}
+    funnel = _Funnel(report_counts)
 
-    def _count(stage: str, df: DataFrame) -> DataFrame:
-        if report_counts:
-            report[stage] = df.count()
-        return df
-
-    _count("input", pages)
+    pages = funnel.stage("input", pages)
 
     if dedup_urls:
         from .operators.urls import dedup_pages_by_url
 
-        pages = _count(
+        pages = funnel.stage(
             "after_url_dedup", dedup_pages_by_url(pages).drop("canonical_url")
         )
 
     if blocklist is not None:
         from .operators.urls import filter_blocklisted_domains
 
-        pages = _count(
+        pages = funnel.stage(
             "after_blocklist", filter_blocklisted_domains(pages, blocklist)
         )
 
     if honor_noindex:
         from .operators.urls import filter_noindex
 
-        pages = _count("after_noindex", filter_noindex(pages))
+        pages = funnel.stage("after_noindex", filter_noindex(pages))
 
     if max_per_domain is not None:
         from .operators.urls import cap_per_domain
 
-        pages = _count(
+        pages = funnel.stage(
             "after_domain_cap", cap_per_domain(pages, max_per_domain)
         )
 
@@ -135,35 +186,27 @@ def build_training_corpus(
         F.col("scrubbed_text").alias("text"),
         "n_entities",
     )
-    if report_counts:
-        # Report mode runs one count() per stage, and every downstream
-        # stage consumes its input several times (passage removal scans
-        # windows + words; decontamination scans windows + anti-joins)
-        # -- without a materialization barrier each of those re-runs
-        # the Python scrub kernel.  localCheckpoint bounds the kernel
-        # to ONE execution.  This is the debug/driver-scale surface;
-        # at production scale use report_counts=False (fully lazy, zero
-        # extra jobs) and read the funnel from the lineage/metrics
-        # tables the checkpoint sink writes.
-        kept = kept.localCheckpoint()
-        if not quality_filter:
-            # evidence for oracles that recompute downstream stages
-            # over the RAW text: how many docs the scrub changed (one
-            # cheap agg over the checkpointed frame).  0 == the corpus
-            # is pattern-bank-clean, so raw-text recomputation is
-            # exact.  Keep-all mode ONLY: under quality_filter the
-            # frame holds kept docs alone, so the count would not mean
-            # "docs the scrub changed" -- and no oracle needs it there.
-            # NOTE for report consumers: this is a side-channel key,
-            # not a funnel stage; pipeline_corpus_builder pops it
-            # before enumerating stages.
-            report["scrub_changed_docs"] = kept.filter(
-                F.col("n_entities") > 0
-            ).count()
-    kept = _count(
+    extra = {}
+    if not quality_filter:
+        # evidence for oracles that recompute downstream stages over
+        # the RAW text: how many docs the scrub changed.  0 == the
+        # corpus is pattern-bank-clean, so raw-text recomputation is
+        # exact.  Keep-all mode ONLY: under quality_filter the frame
+        # holds kept docs alone, so the count would not mean "docs the
+        # scrub changed" -- and no oracle needs it there.  NOTE for
+        # report consumers: this is a side-channel key, not a funnel
+        # stage; pipeline_corpus_builder pops it before enumerating
+        # stages.
+        extra["scrub_changed_docs"] = F.count_if(F.col("n_entities") > 0)
+    kept = funnel.stage(
         "after_quality_filter" if quality_filter else "after_scrub",
-        kept.drop("n_entities"),
+        kept, **extra,
     )
+    # every downstream stage reads its input several times (passage
+    # removal scans windows + words; decontamination scans windows +
+    # anti-joins): without this barrier each of those re-runs the
+    # Python scrub kernel.  Lazy mode leaves that choice to the caller.
+    kept = funnel.barrier(kept).drop("n_entities")
 
     if remove_boilerplate is not None:
         # the SAME no-keeper line-removal core as the oracle-checked
@@ -181,11 +224,9 @@ def build_training_corpus(
             )
             .filter(F.length("text") > 0)
         )
-        if report_counts:
-            kept = kept.localCheckpoint()  # multi-consumer barrier:
-            # the boiler-set agg + join-back would otherwise re-run
-            # per downstream consumer (same class as passage removal)
-        kept = _count("after_line_dedup", kept)
+        # multi-consumer barrier: the boiler-set agg + join-back would
+        # otherwise re-run per downstream consumer
+        kept = funnel.barrier(funnel.stage("after_line_dedup", kept))
 
     if remove_dup_passages:
         # the SAME keyed removal core the oracle-checked driver query
@@ -204,11 +245,9 @@ def build_training_corpus(
             )
             .filter(F.length("text") > 0)
         )
-        if report_counts:
-            kept = kept.localCheckpoint()  # same rationale as above:
-            # decontamination + sampling + the final consumer would
-            # each re-run the two-scan removal plan otherwise
-        kept = _count("after_passage_removal", kept)
+        # same rationale: decontamination + sampling + the final
+        # consumer would each re-run the two-scan removal plan
+        kept = funnel.barrier(funnel.stage("after_passage_removal", kept))
 
     if eval_docs is not None:
         from .operators.textstats import decontaminate
@@ -216,7 +255,7 @@ def build_training_corpus(
         contaminated = decontaminate(
             kept, eval_docs, n=passage_n, text_col="text", id_col="url"
         ).select("url")
-        kept = _count(
+        kept = funnel.stage(
             "after_decontamination",
             kept.join(F.broadcast(contaminated), "url", "left_anti"),
         )
@@ -224,24 +263,27 @@ def build_training_corpus(
     if sample_pct is not None:
         from .operators.textstats import md5_bucket100
 
-        kept = _count(
+        kept = funnel.stage(
             "after_sampling",
             kept.filter(md5_bucket100("url") < sample_pct),
         )
 
-    if token_budget is not None:
-        from .operators.textstats import sample_to_token_budget
+    # one barrier for the tail: the caller's write (and the budget's
+    # bucket-sum pass) read it instead of re-running decontamination
+    kept = funnel.barrier(kept)
+    report = funnel.report
 
+    if token_budget is not None:
+        from .operators.textstats import _token_budget_select
+
+        with job_description(kept.sparkSession, "corpus:token_budget"):
+            kept, kept_tokens, kept_docs = _token_budget_select(
+                kept, token_budget, key_col="url"
+            )
         if report_counts:
-            # the budget op's bucket-sum collect(), the stage count, and
-            # the caller's consumption would each re-run everything
-            # after the last barrier (anti-join + sample filter) -- the
-            # same multi-consumer class bounded above
-            kept = kept.localCheckpoint()
-        kept, kept_tokens = sample_to_token_budget(
-            kept, token_budget, key_col="url"
-        )
-        kept = _count("after_token_budget", kept)
+            # the budget's one eager pass already counted the docs of
+            # the buckets it keeps
+            report["after_token_budget"] = kept_docs
         # always reported: the total was already computed by the one
         # eager job the budget op inherently pays -- discarding it in
         # lazy mode would force callers to re-aggregate for it (the

@@ -419,21 +419,6 @@ def _incremental_candidates(
     )
 
 
-def _shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, __sh array<string>) per-doc DISTINCT shingle set as one
-    array column -- the same windows ``_shingles`` explodes, kept packed
-    (no explode, no shuffle).  Pair-driven scorers intersect these
-    arrays directly instead of equi-joining exploded shingles."""
-    with_words = docs.withColumn("__words", F.split("text", " "))
-    grams = F.expr(
-        f"transform(slice(__words, 1, greatest(size(__words) - {n - 1}, 0)),"
-        f" (w, i) -> concat_ws(' ', slice(__words, i + 1, {n})))"
-    )
-    return with_words.select(
-        "doc_id", F.array_distinct(grams).alias("__sh")
-    )
-
-
 def _cross_jaccard(
     pairs: DataFrame, new_d: DataFrame, hist_d: DataFrame
 ) -> DataFrame:

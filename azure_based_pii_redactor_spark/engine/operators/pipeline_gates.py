@@ -248,10 +248,11 @@ def pipeline_corpus_builder(spark, sf_dir) -> DataFrame:
     fact the ``corpus_bank_clean_ok`` column carries (scrub changed
     zero docs; oracle states TRUE).
 
-    The funnel counts are computed with one Spark job per stage (the
-    numbers every production run logs); the composed plan itself stays
-    lazy -- pass ``report_counts=False`` to ``build_training_corpus``
-    for the zero-extra-jobs form.
+    The funnel counts (the numbers every production run logs) are
+    observed in-job: each stage carries an ``Observation`` that the
+    builder's materialization barriers fill, so no per-stage count job
+    runs -- pass ``report_counts=False`` to ``build_training_corpus``
+    for the fully lazy form.
     """
     from ..corpus import build_training_corpus
 

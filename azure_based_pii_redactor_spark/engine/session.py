@@ -17,6 +17,7 @@ local[32] (SURVEY.md section 4 "what we must do explicitly").
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -61,3 +62,21 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+@contextmanager
+def job_description(spark: SparkSession, label: str):
+    """Label every Spark job started inside the block with ``label`` (the
+    event log and the status store attribute their time to it), then
+    restore the caller's own description -- also when the block raises."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        # None removes the property again
+        sc.setLocalProperty(_JOB_DESCRIPTION, prev)

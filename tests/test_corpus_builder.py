@@ -6,6 +6,7 @@ corpus constructed to trigger all of them."""
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from azure_based_pii_redactor_spark.engine.corpus import build_training_corpus
@@ -293,3 +294,183 @@ def test_optional_boilerplate_line_stage(spark):
         )
     assert report["after_scrub"] == 7
     assert report["after_line_dedup"] == 6
+
+
+def _as_pages(spark, rows):
+    """(url, warc_ts, text, head) rows -> the pages schema the builder
+    reads; ``head`` goes into the html head (robots meta, say)."""
+    return spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, text string, head string"
+    ).select(
+        "url", "warc_ts",
+        F.concat(F.lit("<html><head>"), "head", F.lit("</head><body>"),
+                 "text", F.lit("</body></html>")).cast("binary").alias("html"),
+        "text", F.lit("en").alias("lang"),
+    )
+
+
+def _combo_pages(spark, combo):
+    base = _pages(spark)
+    if combo == "blocklist_noindex":
+        return base.unionByName(_as_pages(spark, [
+            (f"https://n.example/p{i}", datetime(2024, 7, i + 1),
+             f"{GOOD} tail {chr(97 + i)}",
+             '<meta name="robots" content="noindex">' if i == 0 else "")
+            for i in range(3)
+        ]))
+    if combo == "domain_cap_budget":
+        return base.unionByName(_as_pages(spark, [
+            (f"https://flood.example/p{i}", datetime(2024, 7, 1),
+             f"{GOOD} flood{i} words{i} here{i}", "") for i in range(12)
+        ]))
+    if combo == "keep_all_dirty":
+        return base.unionByName(_as_pages(spark, [
+            ("https://p.example/pii", datetime(2024, 5, 1),
+             GOOD + " contact me at someone@corp.example.com please", ""),
+        ]))
+    if combo == "boilerplate":
+        nav = "home about contact subscribe now"
+        return _as_pages(spark, [
+            (f"https://e.example/l{i}", datetime(2024, 5, i + 1),
+             f"{nav}\n{GOOD} liner {chr(97 + i) * 2}", "") for i in range(6)
+        ] + [("https://e.example/only", datetime(2024, 5, 20), nav, "")])
+    if combo == "empty_input":
+        return base.filter(F.lit(False))
+    return base
+
+
+# (combo, build kwargs, the corpus:<stage> labels its report-mode jobs
+# carry: one per barrier, plus the token budget's bucket-sum pass)
+FUNNEL_COMBOS = [
+    ("full", dict(eval=True),
+     {"quality_filter", "passage_removal", "decontamination"}),
+    ("sampling", dict(sample_pct=50),
+     {"quality_filter", "passage_removal", "sampling"}),
+    ("keep_all_dirty", dict(quality_filter=False, eval=True, sample_pct=50),
+     {"scrub", "passage_removal", "sampling"}),
+    ("blocklist_noindex", dict(quality_filter=False, blocklist=True,
+                               honor_noindex=True),
+     {"scrub", "passage_removal"}),
+    ("domain_cap_budget", dict(quality_filter=False, max_per_domain=4,
+                               token_budget=50),
+     {"scrub", "passage_removal", "token_budget"}),
+    ("boilerplate", dict(quality_filter=False, dedup_urls=False,
+                         remove_dup_passages=False, remove_boilerplate=3),
+     {"scrub", "line_dedup"}),
+    ("empty_input", dict(eval=True, sample_pct=50), None),
+]
+
+
+def _build(spark, combo, kw, **extra):
+    kw = dict(kw)
+    if kw.pop("eval", False):
+        kw["eval_docs"] = spark.createDataFrame(
+            [(1, BENCH)], "doc_id long, text string")
+    if kw.pop("blocklist", False):
+        kw["blocklist"] = spark.createDataFrame(
+            [("b.example",)], "domain string")
+    return build_training_corpus(_combo_pages(spark, combo), **kw, **extra)
+
+
+def _jobs_run(spark, fn):
+    """(fn(), descriptions of the Spark jobs fn ran): the jobs are read
+    from the status tracker by a job group set around the call."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"corpus-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "caller description")
+    try:
+        out = fn()
+        assert sc.getLocalProperty("spark.job.description") == (
+            "caller description")  # restored after every barrier
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    descs = []
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        d = jsc.statusStore().job(job).description()
+        descs.append(d.get() if d.isDefined() else None)
+    return out, descs
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+
+@pytest.mark.parametrize("combo,kw,labels", FUNNEL_COMBOS,
+                         ids=[c[0] for c in FUNNEL_COMBOS])
+def test_observed_report_matches_count_funnel(spark, monkeypatch, combo,
+                                              kw, labels):
+    """Report mode reads every funnel count from in-job Observations.
+    Differential: the observed report (order included) and corpus equal
+    a reference funnel that runs an explicit count() per stage frame.
+    Job budget: every job report mode runs is one of its barrier jobs or
+    the token budget's pass -- labelled corpus:<stage>, one label per
+    barrier -- and no count() job runs.  Lazy mode writes the same rows
+    and runs no barrier or count job."""
+    import azure_based_pii_redactor_spark.engine.corpus as corpus_mod
+
+    (corpus, report), descs = _jobs_run(
+        spark, lambda: _build(spark, combo, kw))
+    if labels is not None:
+        assert set(descs) == {f"corpus:{s}" for s in labels}, descs
+    rows = _rows(corpus)
+
+    class CountingFunnel(corpus_mod._Funnel):
+        def stage(self, name, df, **extra):
+            if self.on:
+                self.report[name] = df.count()
+                for k, agg in extra.items():
+                    self.report[k] = df.agg(agg).first()[0]
+            return df
+
+        def barrier(self, df):  # same cut points, nothing observed
+            return df.localCheckpoint()
+
+    with monkeypatch.context() as m:
+        m.setattr(corpus_mod, "_Funnel", CountingFunnel)
+        ref_corpus, ref = _build(spark, combo, kw)
+    assert list(report.items()) == list(ref.items())
+    assert rows == _rows(ref_corpus)
+    if combo == "empty_input":
+        assert set(report.values()) == {0}
+    if combo == "keep_all_dirty":
+        assert report["scrub_changed_docs"] == 1
+
+    (lazy, lazy_report), lazy_descs = _jobs_run(
+        spark, lambda: _build(spark, combo, kw, report_counts=False))
+    budget = "token_budget" in kw
+    # no barrier and no count job; the budget's bucket-sum pass is the
+    # one labelled job.  (Unlabelled jobs do run here: under AQE the
+    # lazy localCheckpoint inside passage removal materializes the
+    # shuffle stages below it while the plan is built.)
+    labelled = {d for d in lazy_descs if d.startswith("corpus:")}
+    assert labelled == ({"corpus:token_budget"} if budget else set())
+    assert lazy_report == ({"kept_tokens": report["kept_tokens"]}
+                           if budget else {})
+    assert _rows(lazy) == rows
+
+
+def test_job_description_restored(spark):
+    """The barrier label is scoped: the caller's description (or its
+    absence) is back afterwards, also when the block raises."""
+    from azure_based_pii_redactor_spark.engine.session import job_description
+
+    sc = spark.sparkContext
+    key = "spark.job.description"
+    assert sc.getLocalProperty(key) is None
+    with job_description(spark, "corpus:x"):
+        assert sc.getLocalProperty(key) == "corpus:x"
+    assert sc.getLocalProperty(key) is None
+    sc.setJobDescription("mine")
+    try:
+        with pytest.raises(RuntimeError):
+            with job_description(spark, "corpus:y"):
+                raise RuntimeError
+        assert sc.getLocalProperty(key) == "mine"
+    finally:
+        sc.setLocalProperty(key, None)

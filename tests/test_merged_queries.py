@@ -837,11 +837,9 @@ def test_decontaminate_bloom_superset_and_fpr(spark):
         assert bloom.get(d, 0) >= n_exact, (d, n_exact, bloom.get(d))
     # false-positive budget: extra flagged windows across the corpus
     # stay near fpp * total windows (generous 5x slack for variance)
-    total_windows = (
-        docs.withColumn("__words", F.split("text", " "))
-        .select(F.explode(ts._word_windows(ts.WINDOW_N)).alias("w"))
-        .count()
-    )
+    total_windows = ts._explode_windows(
+        docs.withColumn("__words", F.split("text", " ")), ts.WINDOW_N
+    ).count()
     extra = sum(bloom.values()) - sum(exact.values())
     assert extra <= max(5, 5 * 1e-3 * total_windows), (
         extra, total_windows)
@@ -1181,16 +1179,14 @@ def test_passage_removal_matches_window_rank_reference(spark):
     from pyspark.sql import functions as F
 
     from azure_based_pii_redactor_spark.engine.operators.textstats import (
-        _word_windows,
+        _explode_windows,
         remove_duplicate_passages,
     )
 
     def reference(df, key, n, carry_cols=(), span_stats=False):
         group = [key, *carry_cols]
         with_words = df.withColumn("__words", F.split("text", " "))
-        wins = with_words.select(
-            key, F.explode(_word_windows(n, with_pos=True)).alias("g")
-        ).select(key, "g.pos", "g.win")
+        wins = _explode_windows(with_words, n, key, with_pos=True)
         ranked = wins.select(
             key, "pos",
             F.count("*").over(Window.partitionBy("win")).alias("cnt"),
@@ -1255,27 +1251,29 @@ def test_passage_removal_matches_window_rank_reference(spark):
     )
 
 
-def test_word_windows_zip_chain_matches_slice_reference(spark):
-    """r8: the zip_with-chain window builder must equal the old
-    per-position slice + concat_ws form on every doc shape (short docs,
-    exact-width docs, empty/blank, multi-space artifacts) for several
-    widths including n=1."""
+def test_explode_windows_matches_slice_reference(spark):
+    """The codegen window builder (posexplode + position filter +
+    concat_ws(slice)) must emit exactly the rows of the per-position
+    slice + concat_ws reference array, exploded, on every doc shape
+    (short docs, exact-width docs, empty/blank, multi-space artifacts)
+    for several widths including n=1 -- compared as sorted row lists,
+    so a missing, extra or duplicated window fails."""
     from pyspark.sql import functions as F
 
     from azure_based_pii_redactor_spark.engine.operators.textstats import (
-        _word_windows,
+        _explode_windows,
     )
 
-    def reference(n, with_pos):
-        if with_pos:
-            body = (f"(w, i) -> struct(i AS pos,"
-                    f" concat_ws(' ', slice(__words, i + 1, {n})) AS win)")
-        else:
-            body = f"(w, i) -> concat_ws(' ', slice(__words, i + 1, {n}))"
-        return F.expr(
+    def reference(df, n, with_pos):
+        arr = F.expr(
             f"transform(slice(__words, 1,"
-            f" greatest(size(__words) - {n - 1}, 0)), {body})"
+            f" greatest(size(__words) - {n - 1}, 0)),"
+            f" (w, i) -> struct(i AS pos,"
+            f" concat_ws(' ', slice(__words, i + 1, {n})) AS win))"
         )
+        out = df.select("k", F.explode(arr).alias("g"))
+        cols = ["k", "g.pos", "g.win"] if with_pos else ["k", "g.win"]
+        return out.select(*cols)
 
     rows = [
         ("a", "one two three four five six seven eight nine ten"),
@@ -1290,10 +1288,8 @@ def test_word_windows_zip_chain_matches_slice_reference(spark):
     )
     for n in (1, 2, 3, 8):
         for with_pos in (False, True):
-            bad = df.select(
-                F.when(
-                    _word_windows(n, with_pos) == reference(n, with_pos),
-                    0,
-                ).otherwise(1).alias("bad")
-            ).agg(F.sum("bad")).collect()[0][0]
-            assert bad == 0, (n, with_pos)
+            got = _explode_windows(df, n, "k", with_pos=with_pos)
+            ref = reference(df, n, with_pos)
+            assert got.columns == ref.columns, (got.columns, ref.columns)
+            assert sorted(got.collect()) == sorted(ref.collect()), (
+                n, with_pos)

@@ -299,16 +299,19 @@ def test_rounding_parity_three_engines(spark):
 
 def test_word_windows_sql_parity_random_texts(spark):
     """word_windows_sql (the oracle-side window definition) must
-    segment identically to _word_windows (the Spark-side one) on
+    segment identically to _explode_windows (the Spark-side one) on
     random texts incl. edge shapes (short docs, repeated words, empty
-    string, multiple spaces)."""
+    string, multiple spaces, leading and trailing spaces, NULL text,
+    space-free CJK text) at several widths.  Both sides are compared
+    as the per-doc window list in position order; a NULL text has no
+    windows on either side (DuckDB's NULL list unnests to no rows)."""
     import random
 
     import duckdb
     import pyspark.sql.functions as F
 
     from azure_based_pii_redactor_spark.engine.operators.textstats import (
-        _word_windows,
+        _explode_windows,
         word_windows_sql,
     )
 
@@ -317,26 +320,37 @@ def test_word_windows_sql_parity_random_texts(spark):
     texts = [""] + ["one two"] + [
         " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 30)))
         for _ in range(200)
-    ] + ["a  b   c " * 4]  # runs of spaces + trailing space
+    ] + [
+        "a  b   c " * 4,  # runs of spaces + trailing space
+        None,
+        "  leading spaces then some more words to make a window",
+        "trailing spaces after enough words to make a window  ",
+        " both ends padded with words enough for eight words ",
+        "東京都は日本の首都であり人口が多い都市です",  # no space at all
+        "東京 大阪 名古屋 札幌 福岡 神戸 京都 横浜 仙台",
+    ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     ).withColumn("__words", F.split("text", " "))
-    got = {
-        r.doc_id: list(r.wins)
-        for r in df.select(
-            "doc_id", _word_windows(8).alias("wins")
-        ).collect()
-    }
     con = duckdb.connect()
-    want_rows = con.execute(
-        "SELECT i, "
-        f"[w for w in {word_windows_sql(8)}] FROM "
-        "(SELECT unnest(range(len($1))) AS i, "
-        " string_split(unnest($1), ' ') AS ws)",
-        [texts],
-    ).fetchall()
-    want = {i: list(w) for i, w in want_rows}
-    assert got == want
+    for n in (1, 3, 8):
+        got: dict = {i: [] for i in range(len(texts))}
+        for r in _explode_windows(df, n, "doc_id", with_pos=True).orderBy(
+            "doc_id", "pos"
+        ).collect():
+            got[r.doc_id].append(r.win)
+        want_rows = con.execute(
+            "SELECT i, "
+            f"[w for w in {word_windows_sql(n)}] FROM "
+            "(SELECT unnest(range(len($1))) AS i, "
+            " string_split(unnest($1), ' ') AS ws)",
+            [texts],
+        ).fetchall()
+        want = {i: list(w or []) for i, w in want_rows}
+        assert got == want, n
+        # the edge shapes are not vacuous: the CJK sentence is one
+        # word, so it has a window only at n=1
+        assert len(got[len(texts) - 2]) == (1 if n == 1 else 0)
 
 
 @settings(max_examples=10, deadline=None)
